@@ -73,10 +73,14 @@ def connected_components(
     und = _symmetrized(_clean_edges(edges, src, dst))
 
     # Materialize the distinct vocabulary graph once (all paths reuse it),
-    # then size-probe with a limit+count — the probe moves NO rows to the
+    # then size-probe with a count — the probe moves NO rows to the
     # driver, so a graph that overflows the union-find cutoff costs two
     # cheap jobs instead of a multi-hundred-MB discarded collect. Only
-    # graphs that pass the probe pay the driver transfer.
+    # graphs that pass the probe pay the driver transfer. Not
+    # limit(n).count(): Spark names each limit's row counter from a
+    # JVM-wide sequence, so every limit plan is new source, compiled again
+    # on every call, where the count's classes stay in the codegen cache.
+    # The limit also funnels up to n rows per partition through one task.
     und = und.localCheckpoint(eager=True)
     spark = edges.sparkSession
 
@@ -84,9 +88,7 @@ def connected_components(
         return _star_labels(spark, und, max_iter)
     if algorithm == "hashmin":
         return _hashmin_labels(und, max_iter, escalate=False)
-    if (
-        und.limit(SMALL_GRAPH_EDGES + 1).count() <= SMALL_GRAPH_EDGES
-    ):
+    if und.count() <= SMALL_GRAPH_EDGES:
         return _union_find_labels(spark, und)
     return _hashmin_labels(und, max_iter, escalate=True)
 

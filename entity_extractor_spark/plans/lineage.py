@@ -65,10 +65,21 @@ class LineageLog:
                 "partitions": partitions or [],
                 "schema": schema_json,
             }
-            tmp = self.path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(rec, f, indent=1)
-            os.replace(tmp, self.path)
+            self._write(rec)
+
+    def record_run(self, **entries) -> None:
+        """Run-level entries (not tied to a stage); each run replaces the
+        previous run's."""
+        with self._lock:
+            rec = self._read()
+            rec["run"] = entries
+            self._write(rec)
+
+    def _write(self, rec: dict) -> None:
+        tmp = self.path + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(rec, f, indent=1)
+        os.replace(tmp, self.path)
 
     def invalidate_from(self, stage: str, order: list[str]) -> None:
         """force-rerun semantics (reference 'force' flag,
@@ -81,10 +92,7 @@ class LineageLog:
                 d = self._stage_dir(s)
                 if os.path.exists(d):
                     shutil.rmtree(d)
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(rec, f, indent=1)
-        os.replace(tmp, self.path)
+        self._write(rec)
 
     def stage_counters(self, stage: str) -> dict:
         return self._read()["stages"].get(stage, {}).get("counters", {})

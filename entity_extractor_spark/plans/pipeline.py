@@ -33,6 +33,7 @@ from ..operators import extract as X
 from ..operators import link as L
 from ..operators import mentions as M
 from ..operators import propagate as P
+from ..session import codegen_compiles
 from .lineage import LineageLog, commit_stage, load_stage
 
 STAGE_ORDER = [
@@ -96,6 +97,7 @@ def run_pipeline(
     associative per-doc transition-table fold (hub-cluster skew path,
     operators/link.py) — identical output, bounded per-task payloads."""
     log = LineageLog(out_dir)
+    compiles_at_start = codegen_compiles(spark)
     if not resume:
         log.invalidate_from(STAGE_ORDER[0], STAGE_ORDER)
 
@@ -114,8 +116,9 @@ def run_pipeline(
     # pure memory-bandwidth tax, which is exactly what capped multi-
     # executor scaling on a shared socket (BENCH_scaling r04 forensics:
     # 1.33x task-CPU inflation at 4 executors, zero spill, zero fetch
-    # wait). Now the corpus is read exactly twice (this parse + the
-    # mention scan), both pure map-side scans.
+    # wait). Now the corpus is read three times, all pure map-side scans:
+    # this parse, and the two scans of the mention stage (the vocabulary
+    # collect and the match, mentions.detect_mentions).
     #
     # Partition on the COLUMN (hash partitioning on doc_id), not on
     # F.hash(doc_id): HashPartitioning(doc_id) satisfies the clustering
@@ -313,4 +316,9 @@ def run_pipeline(
             submit_ready()
 
     parsed.unpersist()  # all outputs read from committed stage tables
+    # Janino compiles during this run. A repeated run in a warm JVM should
+    # read 0 (see STATIC_CONF in session.py); a run that recompiles its
+    # generated classes again shows it here. The counter is JVM-wide, so
+    # queries run concurrently by other threads or sessions are included.
+    log.record_run(codegen_compiles=codegen_compiles(spark) - compiles_at_start)
     return out

@@ -34,8 +34,9 @@ def main() -> None:
     from entity_extractor_spark.corpus import CorpusConfig, gazetteer_rows, generate_documents_df
     from entity_extractor_spark.plans.pipeline import run_pipeline
     from entity_extractor_spark.schemas import DOCUMENTS_SCHEMA
+    from entity_extractor_spark.session import STATIC_CONF
 
-    spark = SparkSession.builder.appName("kg_construct").getOrCreate()
+    spark = SparkSession.builder.appName("kg_construct").config(map=STATIC_CONF).getOrCreate()
 
     cfg = CorpusConfig(n_docs=args.gen_docs or 0)
     if args.gen_docs:
